@@ -17,18 +17,17 @@ import graft.operators.SpatialJoin
  *       from a previous run's --tiles output — skew salting with zero
  *       extra scans of the corpus)
  *     [--zoom 8] [--tiles <dir>]
- *     [--polygons <jsonl> [--cover distributed|driver]]
- *     [--osm-boundaries <xml-glob> | --osm-pbf <pbf-glob>]
+ *     [--polygons <jsonl> | --osm-boundaries <xml-glob> | --osm-pbf <pbf-glob>]
  *
  * --polygons joins against real boundary polygons (PolygonJson lines)
- * instead of the committed fixture set; --cover picks where Geo.cover
- * runs: `distributed` (default — executors, the large-polygon-table
- * path) or `driver` (small sets). --osm-boundaries instead assembles
- * the polygons from OSM XML boundary relations (OsmXml.readBoundaries:
- * executor-side filtering, driver-side ring stitching); --osm-pbf does
- * the same from a PBF file (blob = split unit, so one planet file
- * parallelizes) — the reference's actual polygon provenance, end to
- * end through the CLI.
+ * instead of the committed fixture set; --osm-boundaries instead
+ * assembles the polygons from OSM XML boundary relations, --osm-pbf
+ * from a PBF file (blob = split unit, so one planet file parallelizes)
+ * — the reference's actual polygon provenance, end to end through the
+ * CLI. Every polygon input takes the one executor path: ring stitching
+ * per relation (OsmXml.boundariesDistributedFrom) and Geo.cover
+ * (SpatialJoin.coverDFDistributed) run on executors, so geometry never
+ * passes through the driver. Unknown --keys fail naming the key.
  *
  * Re-invoking with the same --run-id resumes: completed cell prefixes are
  * pruned before the join (plans/Lineage). On a cluster the session comes
@@ -77,35 +76,19 @@ object Main {
       case other => sys.error(s"unknown --mode $other")
     }
 
-    val cover = opts.get("polygons").map { p =>
-      opts.getOrElse("cover", "distributed") match {
-        case "distributed" => sources.PolygonJson.coverFromJsonDistributed(spark, p)
-        case "driver" => sources.PolygonJson.coverFromJson(spark, p)
-        case other => sys.error(s"unknown --cover $other")
+    val cover = opts.get("polygons")
+      .map(p => sources.PolygonJson.coverFromJsonDistributed(spark, p))
+      .orElse {
+        // --osm-boundaries <xml-glob> | --osm-pbf <pbf-glob>: same assembly
+        // chain, different parse (splittable blob-ranged PBF for planet
+        // files). Parsed dataset -> boundary relations -> cover.
+        import org.apache.spark.sql.functions.col
+        opts.get("osm-boundaries").map(g => sources.OsmXml.read(spark, g))
+          .orElse(opts.get("osm-pbf").map(g => sources.OsmPbf.read(spark, g)))
+          .map(objs => SpatialJoin.coverDFDistributed(
+            sources.OsmXml.boundariesDistributedFrom(objs)
+              .select(col("regionId").as("region_id"), col("part"), col("rings"))))
       }
-    }.orElse {
-      // --osm-boundaries <xml-glob> | --osm-pbf <pbf-glob>: same assembly
-      // chain, different parse (splittable blob-ranged PBF for planet
-      // files). Parsed dataset -> boundary relations -> cover.
-      val parsed = opts.get("osm-boundaries")
-        .map(g => sources.OsmXml.read(spark, g))
-        .orElse(opts.get("osm-pbf").map(g => sources.OsmPbf.read(spark, g)))
-      parsed.map { objs =>
-        opts.getOrElse("cover", "driver") match {
-          case "distributed" =>
-            // planetary path: assembly AND covers on executors — geometry
-            // never passes through the driver
-            import org.apache.spark.sql.functions.col
-            val polys = sources.OsmXml.boundariesDistributedFrom(objs)
-              .select(col("regionId").as("region_id"), col("part"), col("rings"))
-            operators.SpatialJoin.coverDFDistributed(polys)
-          case "driver" =>
-            operators.SpatialJoin.coverDF(spark,
-              sources.OsmXml.boundariesFrom(objs))
-          case other => sys.error(s"unknown --cover $other")
-        }
-      }
-    }
 
     val runId = opts.getOrElse("run-id", "run")
     val n = Pipeline.runResumable(spark, pages, opts("out"),
@@ -121,13 +104,20 @@ object Main {
     spark.stop()
   }
 
-  private def parseArgs(args: Array[String]): Map[String, String] = {
+  private val knownKeys = Set("pages", "format", "warc", "out", "lineage",
+    "run-id", "mode", "hot-tiles", "hot-threshold", "zoom", "tiles",
+    "polygons", "osm-boundaries", "osm-pbf")
+
+  private[graft] def parseArgs(args: Array[String]): Map[String, String] = {
     val m = scala.collection.mutable.Map.empty[String, String]
     var i = 0
     while (i < args.length) {
       require(args(i).startsWith("--") && i + 1 < args.length,
         s"expected --key value pairs, got: ${args.mkString(" ")}")
-      m(args(i).drop(2)) = args(i + 1)
+      val key = args(i).drop(2)
+      require(knownKeys(key), s"unknown option --$key " +
+        s"(known: ${knownKeys.toSeq.sorted.map("--" + _).mkString(" ")})")
+      m(key) = args(i + 1)
       i += 2
     }
     require((m.contains("pages") || m.contains("warc")) && m.contains("out"),

@@ -26,8 +26,9 @@ object Pipeline {
       .where(col("lat").isNotNull && col("lon").isNotNull)
 
   /** (url, lat, lon, region_id) exact region matches. `cover` defaults to
-    * the committed fixture polygons; pass one built by
-    * SpatialJoin.coverDF / coverDFDistributed for real boundary inputs. */
+    * the committed fixture polygons; for real boundary inputs pass one
+    * built by SpatialJoin.coverDFDistributed (polygon files and OSM
+    * relations) or SpatialJoin.coverDF (an in-memory PolyPart seq). */
   def matches(spark: SparkSession, pages: DataFrame,
               mode: SpatialJoin.Mode = SpatialJoin.Auto(),
               cover: Option[SpatialJoin.CoverSides] = None): DataFrame =

@@ -121,7 +121,7 @@ object ScalingBench {
          |flagship figures (this file and the driver's) measure that plan;
          |the FULL pipeline (extraction + PIP refine + collect_set, noop
          |sink per guide §1.4) is timed separately by
-         |`graft.FlagshipProbe flagnoop` and reported alongside. Corpus:
+         |`python3 perfbench/run.py --workload coverage --trace 1`. Corpus:
          |$nPages pages, 1-4 KB html each, 128 files, synthesized
          |deterministically (`graft.sources.Pages`).
          |

@@ -160,12 +160,12 @@ object SpatialJoin {
     *            refine reads vertices in place from UnsafeArrayData with
     *            zero per-candidate allocation (vs materializing
     *            Array[Array[Double]] per row, the round-2 refine hot spot).
-    * Two construction paths, one consumer contract:
-    * [[coverDF]] computes covers driver-side from a local PolyPart seq
-    * (the committed-fixture / small-region-set path, memoized);
+    * Two construction paths, picked by input type, one consumer contract:
+    * [[coverDF]] computes covers driver-side from an in-memory PolyPart
+    * seq (the committed fixtures; memoized, zero Spark jobs);
     * [[coverDFDistributed]] maps Geo.cover over a polygon RELATION on
-    * executors — the production enrichment job for 10^5..10^6-polygon
-    * tables where driver-side cover build would serialize job startup.
+    * executors — the path of every polygon file and OSM boundary input,
+    * 10^5..10^6-polygon tables included.
     *
     * Both carry the same driver-side SUMMARY (never the full cell list —
     * a planetary cover is too large to collect):
@@ -203,9 +203,40 @@ object SpatialJoin {
   /** Visible for the eviction test. */
   private[graft] def coverCacheSize: Int = coverCache.size()
 
+  /** Malformed geometry fails LOUDLY with the polygon named, not deep in
+    * cover math (an odd-length ring would silently drop its last
+    * coordinate; a null/short ring would corrupt the bbox quietly). */
+  private def validated(rid: Long, part: Int,
+                        rings: Seq[Seq[Double]]): Array[Array[Double]] = {
+    require(rings != null && rings.nonEmpty,
+      s"polygon ($rid, $part): rings missing or empty")
+    rings.iterator.map { ring =>
+      require(ring != null && ring.length >= 6 && ring.length % 2 == 0,
+        s"polygon ($rid, $part): ring must be flat [lon,lat,...] pairs " +
+          s"with >= 3 vertices, got length ${if (ring == null) -1 else ring.length}")
+      ring.toArray
+    }.toArray
+  }
+
+  private val PartCols = Seq("region_id", "part", "rings_flat",
+    "ring_offsets", "lat_min", "lat_max", "lon_min", "lon_max")
+
+  /** One `parts` row ([[PartCols]]): the rings validated, then packed
+    * (see CoverSides) with their bbox. Both cover paths build it here, so
+    * their parts sides cannot drift apart. */
+  private def partRow(rid: Long, part: Int, rings: Seq[Seq[Double]]) = {
+    val arr = validated(rid, part, rings)
+    val (latMin, latMax, lonMin, lonMax) = Geo.bbox(arr)
+    (rid, part, arr.flatten.toSeq, arr.scanLeft(0)(_ + _.length).toSeq,
+      latMin, latMax, lonMin, lonMax)
+  }
+
   def coverDF(spark: SparkSession, parts: Seq[Polygons.PolyPart] = Polygons.all,
               rMin: Int = RMin, rMax: Int = RMax): CoverSides = {
     import spark.implicits._
+    // built first: validation must fail before Geo.cover sees the rings
+    val partRows = parts.map(p => partRow(p.regionId, p.part,
+      p.rings.toSeq.map(_.toSeq)))
     val key = (contentKey(parts), rMin, rMax)
     if (coverCache.size() >= CoverCacheMax && !coverCache.containsKey(key))
       coverCache.clear()
@@ -213,17 +244,9 @@ object SpatialJoin {
       parts.flatMap { p =>
         Geo.cover(p.rings, rMin, rMax).map(cell => (cell, p.regionId, p.part))
       })
-    // packed rings: flat vertex array + ring offsets (see CoverSides doc)
-    val partRows = parts.map { p =>
-      val flat = p.rings.flatten
-      val offsets = p.rings.scanLeft(0)(_ + _.length)
-      (p.regionId, p.part, flat.toSeq, offsets.toSeq,
-        p.latMin, p.latMax, p.lonMin, p.lonMax)
-    }
     CoverSides(
       cellRows.toDF("cell", "region_id", "part"),
-      partRows.toDF("region_id", "part", "rings_flat", "ring_offsets",
-        "lat_min", "lat_max", "lon_min", "lon_max"),
+      partRows.toDF(PartCols: _*),
       cellRows.map(r => Cells.parent(r._1, rMin)).distinct.sorted.toArray,
       cellRows.map(r => Cells.res(r._1)).distinct.sorted,
       cellRows.length.toLong, rMin, rMax)
@@ -248,32 +271,13 @@ object SpatialJoin {
       .select(col("region_id").cast("long"), col("part").cast("int"),
         col("rings").cast("array<array<double>>"))
       .as[(Long, Int, Seq[Seq[Double]])]
-    // malformed geometry fails LOUDLY with the polygon named, not deep in
-    // cover math (an odd-length ring would silently drop its last
-    // coordinate; a null/short ring would corrupt the bbox quietly)
-    def validated(rid: Long, part: Int, rings: Seq[Seq[Double]]): Array[Array[Double]] = {
-      require(rings != null && rings.nonEmpty,
-        s"polygon ($rid, $part): rings missing or empty")
-      rings.iterator.map { ring =>
-        require(ring != null && ring.length >= 6 && ring.length % 2 == 0,
-          s"polygon ($rid, $part): ring must be flat [lon,lat,...] pairs " +
-            s"with >= 3 vertices, got length ${if (ring == null) -1 else ring.length}")
-        ring.toArray
-      }.toArray
-    }
     val cells = polys.flatMap { case (rid, part, rings) =>
         Geo.cover(validated(rid, part, rings), rMin, rMax)
           .map(c => (c, rid, part))
       }.toDF("cell", "region_id", "part")
       .localCheckpoint(true)
     val partsDf = polys.map { case (rid, part, rings) =>
-        val arr = validated(rid, part, rings)
-        val flat = arr.flatten.toSeq
-        val offsets = arr.scanLeft(0)(_ + _.length).toSeq
-        val (latMin, latMax, lonMin, lonMax) = Geo.bbox(arr)
-        (rid, part, flat, offsets, latMin, latMax, lonMin, lonMax)
-      }.toDF("region_id", "part", "rings_flat", "ring_offsets",
-        "lat_min", "lat_max", "lon_min", "lon_max")
+        partRow(rid, part, rings) }.toDF(PartCols: _*)
     // resolution lives in id bits 60..56 (Cells layout; ids are positive)
     val summary = cells.agg(
       collect_set(GeoFunctions.cellParent(col("cell"), lit(rMin))).as("cp"),
@@ -285,15 +289,6 @@ object SpatialJoin {
       summary.getLong(2), rMin, rMax)
   }
 
-  /** Assign containing regions to points. Input must carry `lat`,`lon` and
-    * a unique key column `keyCol`; output = input columns + region_id
-    * (inner; points in no region drop out), exactly one row per
-    * (point, region). */
-  /** `dedup=false` skips the final per-(key, region) dropDuplicates —
-    * correct whenever the caller's next operator absorbs duplicates (e.g.
-    * a downstream distinct/groupBy), saving one full shuffle. Duplicates
-    * only arise for multi-part regions (a point in two parts of one
-    * region). */
   /** Auto -> Broadcast | Shuffle by cover size; pass-through otherwise.
     * Driver-side only (nCells is already local), zero Spark jobs. */
   def resolveMode(mode: Mode, cover: CoverSides): Mode = mode match {
@@ -361,9 +356,12 @@ object SpatialJoin {
     }
   }
 
+  /** Assign containing regions to points. Input must carry `lat`,`lon` and
+    * a unique key column `keyCol`; output = input columns + region_id
+    * (inner; points in no region drop out), exactly one row per
+    * (point, region). */
   def assign(points: DataFrame, keyCol: String, cover: CoverSides,
-             mode: Mode = Auto(),
-             dedup: Boolean = true): DataFrame = {
+             mode: Mode = Auto()): DataFrame = {
     import points.sparkSession.implicits._
     val rMin = cover.rMin
     val rMax = cover.rMax
@@ -402,10 +400,10 @@ object SpatialJoin {
 
     // a region can match via several parts; compact cover cells are
     // disjoint so per part there is at most one candidate row
-    val out = refined.drop("cell", "cell_rmax", "part",
-      "rings_flat", "ring_offsets",
-      "lat_min", "lat_max", "lon_min", "lon_max")
-    if (dedup) out.dropDuplicates(keyCol, "region_id") else out
+    refined.drop("cell", "cell_rmax", "part",
+        "rings_flat", "ring_offsets",
+        "lat_min", "lat_max", "lon_min", "lon_max")
+      .dropDuplicates(keyCol, "region_id")
   }
 
   /** One row per input point with `regions: ARRAY<BIGINT>` — the sorted set

@@ -363,8 +363,8 @@ object OsmPbf {
 
   /** Distributed read: blob slices decoded executor-side. Emits the same
     * OsmObject rows as OsmXml.read on equivalent content, so everything
-    * downstream (features, boundary assembly driver or distributed,
-    * coverDFDistributed) runs unchanged on PBF input. */
+    * downstream (features, boundariesDistributedFrom, coverDFDistributed)
+    * runs unchanged on PBF input. */
   def read(spark: SparkSession, pathGlob: String): Dataset[OsmObject] = {
     import spark.implicits._
     val slices = blobSlices(spark, pathGlob)

@@ -105,9 +105,10 @@ object OsmXml {
     * by float coordinate equality), reversing segments as needed; a hole
     * is attached to the shell that contains its first vertex. Emitted
     * rings are open (closing vertex dropped), flat [lon,lat,...] — the
-    * exact PolyPart layout SpatialJoin.coverDF consumes, so
+    * exact PolyPart layout the covers consume, so
     * "OSM XML -> polygons -> cover -> spatial join" is one composed path
-    * (SourcesSpec proves it end-to-end).
+    * (SourcesSpec proves it end-to-end). [[boundariesDistributedFrom]]
+    * runs it per relation on executors.
     *
     * Deterministic: relations ordered by id, ways stitched in member
     * order, extension always picks the first matching segment. Unclosed
@@ -191,61 +192,6 @@ object OsmXml {
     rings.toSeq
   }
 
-  /** Distributed parse -> EXECUTOR-SIDE filtering -> driver-side boundary
-    * assembly. The polygon set being the small join dimension justifies
-    * driver-side STITCHING, not driver-side FILTERING: a planet extract
-    * holds billions of nodes of which only the boundary-relevant ones may
-    * ever reach the driver. The filter chain is three distributed passes
-    * over one parsed, executor-disk-persisted dataset:
-    *
-    *   1. boundary/multipolygon relations (tiny by construction — collected);
-    *   2. ways semi-joined on the relations' member way ids (broadcast —
-    *      the id list is bounded by total boundary membership);
-    *   3. nodes semi-joined on those ways' exploded nd refs (plain equi
-    *      semi-join, NOT an in-collection literal: the boundary vertex set
-    *      can reach tens of millions on a planet extract, so it stays a
-    *      relation and AQE picks the join strategy).
-    *
-    * Only the filtered subset — relations + member ways + ring vertices —
-    * is collected into [[boundaryPolygons]]; the stitcher itself is
-    * genuinely small once inputs are filtered. */
-  def readBoundaries(spark: SparkSession,
-                     pathGlob: String): Seq[graft.core.Polygons.PolyPart] =
-    boundariesFrom(read(spark, pathGlob))
-
-  /** Source-agnostic form of [[readBoundaries]]: any OsmObject dataset
-    * (XML files, PBF blobs — OsmPbf.read emits the same rows) goes through
-    * the identical filter + stitch chain. */
-  def boundariesFrom(parsed: Dataset[OsmObject]): Seq[graft.core.Polygons.PolyPart] = {
-    val spark = parsed.sparkSession
-    import spark.implicits._
-    import org.apache.spark.sql.functions._
-    // parse once, spill to executor-local disk: the three passes below
-    // re-read the parse, not the source bytes
-    val objs = parsed
-      .persist(org.apache.spark.storage.StorageLevel.DISK_ONLY)
-    try {
-      val rels = objs.filter(o => o.featureType == "relation" &&
-          o.tags.get("type").exists(t => t == "boundary" || t == "multipolygon"))
-        .collect().toSeq
-      val wayIds = rels.flatMap(_.members.collect {
-        case OsmMember("way", ref, _) => ref
-      }).distinct
-      val waysDs = objs.filter(col("featureType") === "way")
-        .join(broadcast(wayIds.toDF("__ref")),
-          col("featureId") === col("__ref"), "left_semi")
-        .as[OsmObject]
-      val nodeRefs = waysDs.select(explode(col("ndRefs")).as("__ref")).distinct()
-      val nodesDs = objs.filter(col("featureType") === "node")
-        .join(nodeRefs, col("featureId") === col("__ref"), "left_semi")
-        .as[OsmObject]
-      boundaryPolygons(rels ++ waysDs.collect() ++ nodesDs.collect())
-    } finally {
-      objs.unpersist(blocking = false)
-      ()
-    }
-  }
-
   /** One keyed fragment of a boundary relation's input, for the
     * distributed assembly path: kind 0 = relation member (way ref + role
     * at member position midx), kind 1 = way (ndRefs), kind 2 = node
@@ -257,16 +203,18 @@ object OsmXml {
       ndRefs: Seq[Long], nodeId: Long, lon: Double, lat: Double,
       hasCoords: Boolean)
 
-  /** Fully distributed boundary assembly: geometry NEVER passes through
-    * the driver. Relations are independent, so after the same executor-
-    * side filtering as [[readBoundaries]] the inputs are re-keyed by
-    * relation id and each relation's ways + ring nodes are grouped onto
-    * one executor, where the exact same pure stitcher
+  /** Boundary assembly from a distributed parse: geometry NEVER passes
+    * through the driver. Executor-side filtering keeps only boundary
+    * relations, their member ways (joined on way id) and those ways'
+    * ring nodes (joined on node id) — a planet extract's billions of
+    * other nodes never leave the scan. Relations are independent, so the
+    * kept inputs are re-keyed by relation id and each relation's ways +
+    * ring nodes are grouped onto one executor, where the pure stitcher
     * ([[boundaryPolygons]]) runs on the reconstructed object set —
-    * identical PolyParts by construction, loud on missing/coordless
-    * nodes and unclosed rings exactly as the driver path is (missing
-    * ways/nodes drop out of the joins and surface as the stitcher's
-    * "references missing ..." failure).
+    * identical PolyParts to the stitcher over the full parse, loud on
+    * missing/coordless nodes and unclosed rings exactly as it is
+    * (missing ways/nodes drop out of the joins and surface as the
+    * stitcher's "references missing ..." failure).
     *
     * Per-relation memory is that relation's own rings — bounded — and
     * thousands of relations assemble in parallel. The result feeds
@@ -287,6 +235,8 @@ object OsmXml {
     val spark = parsed.sparkSession
     import spark.implicits._
     import org.apache.spark.sql.functions._
+    // parse once, spill to executor-local disk: the relation, way and
+    // node passes below re-read the parse, not the source bytes
     val objs = parsed
       .persist(org.apache.spark.storage.StorageLevel.DISK_ONLY)
     val rels = objs.filter(o => o.featureType == "relation" &&
@@ -300,7 +250,7 @@ object OsmXml {
     // members would otherwise produce no pieces at all and silently vanish
     // from the groupByKey — the sentinel guarantees every boundary
     // relation reaches the stitcher, which then fails loudly ("has no
-    // outer ring") exactly as the driver path does
+    // outer ring")
     val members = rels.flatMap { r =>
       RelPiece(r.featureId, 3, 0, 0L, "", Nil, 0L, 0.0, 0.0, false) +:
         r.members.zipWithIndex.collect {

@@ -1,9 +1,8 @@
 package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 
-import graft.core.{Geo, Polygons}
+import graft.core.Polygons
 import graft.operators.SpatialJoin
 
 /**
@@ -12,38 +11,22 @@ import graft.operators.SpatialJoin
  * [[lon,lat,lon,lat,...]] (ring 0 shell, rest holes — the engine's native
  * layout, a flattened GeoJSON Polygon coordinates array).
  *
- * Read with an explicit schema (spark.read.json), enriched driver-side
- * with the compact cover (the polygon table is the small dimension).
+ * Read with an explicit schema (spark.read.json) into a polygon relation
+ * that SpatialJoin.coverDFDistributed covers on executors — the file is
+ * never collected to the driver.
  */
 object PolygonJson {
 
   val schema = "region_id LONG, part INT, name STRING, rings ARRAY<ARRAY<DOUBLE>>"
-
-  def read(spark: SparkSession, path: String): Seq[Polygons.PolyPart] =
-    spark.read.schema(schema).json(path).collect().toSeq.map { r =>
-      Polygons.PolyPart(
-        r.getAs[Long]("region_id"),
-        r.getAs[Int]("part"),
-        r.getAs[String]("name"),
-        r.getAs[scala.collection.Seq[scala.collection.Seq[Double]]]("rings")
-          .map(_.toArray).toArray)
-    }
 
   /** The polygon RELATION (distributed; nothing collected) — the input
     * shape of SpatialJoin.coverDFDistributed. */
   def readDF(spark: SparkSession, path: String): DataFrame =
     spark.read.schema(schema).json(path)
 
-  /** Parts -> the join-ready cover sides (driver-side covers; the
-    * small-region-set path). */
-  def coverFromJson(spark: SparkSession, path: String,
-                    rMin: Int = SpatialJoin.RMin,
-                    rMax: Int = SpatialJoin.RMax): SpatialJoin.CoverSides =
-    SpatialJoin.coverDF(spark, read(spark, path), rMin, rMax)
-
-  /** Parts -> cover sides with covers computed ON EXECUTORS — the
-    * production path for large polygon tables (SpatialJoin
-    * .coverDFDistributed doc). */
+  /** Parts -> cover sides with covers computed ON EXECUTORS (SpatialJoin
+    * .coverDFDistributed doc) — the one path from a polygon file to a
+    * cover. */
   def coverFromJsonDistributed(spark: SparkSession, path: String,
                                rMin: Int = SpatialJoin.RMin,
                                rMax: Int = SpatialJoin.RMax): SpatialJoin.CoverSides =

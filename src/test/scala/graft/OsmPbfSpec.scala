@@ -5,7 +5,8 @@ import graft.sources.OsmXml.OsmObject
 
 /** PBF decode parity vs the XML parser: identical OsmObjects (coordinates
   * EXACTLY equal — the nano/1e9 division contract in OsmPbf's scaladoc),
-  * identical boundary assembly through both driver and distributed paths,
+  * identical boundary assembly through the driver-side stitcher and the
+  * distributed path,
   * multi-blob framing, plain + dense nodes, granularity/offset math, and
   * loud failure modes. */
 class OsmPbfSpec extends SparkTestBase {
@@ -78,7 +79,8 @@ class OsmPbfSpec extends SparkTestBase {
     val path = tmp("b.pbf")
     PbfTestWriter.write(path, xmlObjs, perBlob = 4)
     val fromXml = OsmXml.boundaryPolygons(xmlObjs)
-    val driver = OsmXml.boundariesFrom(OsmPbf.read(spark, path))
+    // driver: the pure stitcher over the collected PBF parse
+    val driver = OsmXml.boundaryPolygons(OsmPbf.read(spark, path).collect().toSeq)
     val dist = OsmXml.boundariesDistributedFrom(OsmPbf.read(spark, path))
       .collect().toSeq.sortBy(p => (p.regionId, p.part))
     def render(ps: Seq[graft.core.Polygons.PolyPart]) =
@@ -127,7 +129,7 @@ class OsmPbfSpec extends SparkTestBase {
   test("way-less boundary relation fails loudly in the DISTRIBUTED path too") {
     // regression (round-4 advice): a boundary relation with zero way
     // members used to produce no RelPieces and silently vanish from the
-    // distributed groupByKey, while the driver path failed loudly
+    // distributed groupByKey, while the driver-side stitcher failed loudly
     val xml =
       """<?xml version='1.0' encoding='UTF-8'?>
         |<osm version="0.6">
@@ -141,7 +143,7 @@ class OsmPbfSpec extends SparkTestBase {
     java.nio.file.Files.writeString(
       java.nio.file.Paths.get(s"$dir/x.osm"), xml)
     val eDriver = intercept[Exception](
-      OsmXml.readBoundaries(spark, s"$dir/x.osm"))
+      OsmXml.boundaryPolygons(OsmXml.parseDocument(xml).toSeq))
     val eDist = intercept[Exception](
       OsmXml.readBoundariesDistributed(spark, s"$dir/x.osm").collect())
     assert(eDriver.getMessage.contains("no outer ring"))
@@ -192,7 +194,8 @@ class OsmPbfSpec extends SparkTestBase {
     // the planet-file shape at volume: a million bulk nodes drowning a
     // handful of boundary objects, split across ~250 blobs — decode
     // parallelizes per blob, the filter chain runs executor-side, and
-    // both assembly paths emit the same PolyParts as the pure stitcher
+    // the distributed assembly emits the same PolyParts as the pure
+    // stitcher
     import graft.sources.OsmXml.OsmObject
     val bulk = (0 until 1000000).map(i =>
       OsmObject(100000L + i, "node", Some(1.0), Some(1.0), Map.empty))
@@ -208,8 +211,6 @@ class OsmPbfSpec extends SparkTestBase {
     val full = OsmXml.boundaryPolygons(boundary)
     def render(ps: Seq[graft.core.Polygons.PolyPart]) =
       ps.map(p => (p.regionId, p.part, p.rings.map(_.toSeq).toSeq))
-    val driver = OsmXml.boundariesFrom(OsmPbf.read(spark, path))
-    assert(render(driver) == render(full))
     val dist = OsmXml.boundariesDistributedFrom(OsmPbf.read(spark, path))
       .collect().toSeq.sortBy(p => (p.regionId, p.part))
     assert(render(dist) == render(full) && full.nonEmpty)

@@ -309,6 +309,12 @@ class PipelineSpec extends SparkTestBase {
     }
     val msg = e.getCause match { case c if c != null => c.getMessage; case _ => e.getMessage }
     assert(msg != null && msg.contains("(42, 1)"), msg)
+    // the in-memory path shares the validation: same ring, same failure
+    val eLocal = intercept[IllegalArgumentException] {
+      SpatialJoin.coverDF(spark,
+        Seq(Polygons.PolyPart(42, 1, "bad", Array(Array(0.0, 0.0, 10.0, 0.0, 10.0)))))
+    }
+    assert(eLocal.getMessage.contains("(42, 1)"), eLocal.getMessage)
   }
 
   test("probe explode covers only the resolutions present in the cover") {

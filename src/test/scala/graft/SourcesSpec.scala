@@ -113,12 +113,12 @@ class SourcesSpec extends SparkTestBase {
     }
   }
 
-  test("readBoundaries filters executor-side: 10^6 irrelevant nodes, identical PolyParts") {
+  test("readBoundariesDistributed filters executor-side: 10^6 irrelevant nodes, identical PolyParts") {
     // a planet-extract-shaped input: a handful of boundary relations
     // drowning in bulk nodes/ways that have nothing to do with boundaries.
-    // The distributed path (relation scan -> way semi-join -> node
-    // semi-join -> collect the tiny subset) must assemble byte-identical
-    // PolyParts to the pure stitcher fed the full parse.
+    // The distributed path (relation scan -> way join -> node join ->
+    // per-relation stitching) must assemble byte-identical PolyParts to
+    // the pure stitcher fed the full parse.
     val sb = new StringBuilder(64 << 20)
     sb ++= "<?xml version='1.0' encoding='UTF-8'?>\n<osm version=\"0.6\">\n"
     sb ++= """  <node id="1" lat="0.001" lon="0.001"/>
@@ -149,7 +149,8 @@ class SourcesSpec extends SparkTestBase {
     val xml = sb.toString
     val dir = java.nio.file.Files.createTempDirectory("graftosmbig").toString
     java.nio.file.Files.writeString(java.nio.file.Paths.get(s"$dir/big.osm"), xml)
-    val dist = OsmXml.readBoundaries(spark, s"$dir/big.osm")
+    val dist = OsmXml.readBoundariesDistributed(spark, s"$dir/big.osm")
+      .collect().toSeq.sortBy(p => (p.regionId, p.part))
     val full = OsmXml.boundaryPolygons(OsmXml.parseDocument(xml).toSeq)
     assert(dist.map(p => (p.regionId, p.part)) == full.map(p => (p.regionId, p.part)))
     dist.zip(full).foreach { case (a, b) =>
@@ -157,11 +158,6 @@ class SourcesSpec extends SparkTestBase {
       a.rings.zip(b.rings).foreach { case (ra, rb) => assert(ra.sameElements(rb)) }
     }
     assert(dist.length == 1 && dist.head.regionId == 200L)
-    // the per-relation executor-stitching path agrees at volume too
-    val dist2 = OsmXml.readBoundariesDistributed(spark, s"$dir/big.osm").collect()
-    assert(dist2.length == 1 && dist2.head.regionId == 200L &&
-      dist2.head.rings.length == full.head.rings.length &&
-      dist2.head.rings(0).sameElements(full.head.rings(0)))
   }
 
   test("distributed boundary assembly == driver stitcher, geometry never on the driver") {
@@ -208,13 +204,14 @@ class SourcesSpec extends SparkTestBase {
     val drv = norm(OsmXml.boundaryPolygons(OsmXml.parseDocument(xml).toSeq))
     assert(dist == drv && dist.map(_._1) == Seq(200L, 201L))
     // ...and the fully distributed chain (executor assembly -> executor
-    // covers -> join) returns the same matches as the driver chain
+    // covers -> join) returns the same matches as an in-memory cover of
+    // the pure stitcher's parts
     import spark.implicits._
     val polyDf = OsmXml.readBoundariesDistributed(spark, s"$dir/x.osm")
       .select(col("regionId").as("region_id"), col("part"), col("rings"))
     val dCover = SpatialJoin.coverDFDistributed(polyDf, rMin = 5, rMax = 8)
     val lCover = SpatialJoin.coverDF(spark,
-      OsmXml.readBoundaries(spark, s"$dir/x.osm"), rMin = 5, rMax = 8)
+      OsmXml.boundaryPolygons(OsmXml.parseDocument(xml).toSeq), rMin = 5, rMax = 8)
     val pts = Seq((1L, 2.0, 2.0), (2L, 5.0, 5.0), (3L, 22.0, 21.0))
       .toDF("k", "lat", "lon")
     def run(c: SpatialJoin.CoverSides) =
@@ -247,20 +244,18 @@ class SourcesSpec extends SparkTestBase {
     assert(doubled.map(p => (p.regionId, p.part)) ==
       single.map(p => (p.regionId, p.part)))
     assert(doubled.head.rings(0).sameElements(single.head.rings(0)))
-    // both Spark paths over two overlapping files
+    // the Spark path over two overlapping files
     val dir = java.nio.file.Files.createTempDirectory("graftosmdup").toString
     java.nio.file.Files.writeString(java.nio.file.Paths.get(s"$dir/a.osm"), xml)
     java.nio.file.Files.writeString(java.nio.file.Paths.get(s"$dir/b.osm"), xml)
-    val drv = OsmXml.readBoundaries(spark, s"$dir/*.osm")
-    assert(drv.length == 1 && drv.head.rings(0).sameElements(single.head.rings(0)))
     val dist = OsmXml.readBoundariesDistributed(spark, s"$dir/*.osm").collect()
     assert(dist.length == 1 && dist.head.rings(0).sameElements(single.head.rings(0)))
   }
 
-  test("readBoundaries resolves cross-FILE references (split extracts)") {
+  test("readBoundariesDistributed resolves cross-FILE references (split extracts)") {
     // real extracts ship split (per-region files, or nodes/ways/relations
     // in separate dumps): a relation in one file referencing ways in a
-    // second and nodes in a third must assemble — the semi-join chain
+    // second and nodes in a third must assemble — the join chain
     // operates over the union of all parsed files, not per document
     val nodes =
       """<?xml version='1.0' encoding='UTF-8'?>
@@ -289,10 +284,14 @@ class SourcesSpec extends SparkTestBase {
     Seq("nodes" -> nodes, "ways" -> ways, "rels" -> rels).foreach { case (n, c) =>
       java.nio.file.Files.writeString(java.nio.file.Paths.get(s"$dir/$n.osm"), c)
     }
-    val parts = OsmXml.readBoundaries(spark, s"$dir/*.osm")
+    val parts = OsmXml.readBoundariesDistributed(spark, s"$dir/*.osm").collect()
     assert(parts.length == 1 && parts.head.regionId == 300L)
     assert(parts.head.rings.length == 1 && parts.head.rings(0).length == 8)
     assert(graft.core.Geo.contains(5.0, 5.0, parts.head.rings))
+    // identical to the pure stitcher over the three documents together
+    val whole = OsmXml.boundaryPolygons(
+      Seq(nodes, ways, rels).flatMap(OsmXml.parseDocument))
+    assert(parts.head.rings(0).sameElements(whole.head.rings(0)))
   }
 
   test("boundary assembly fails loudly on a ring node without coordinates") {
@@ -345,10 +344,13 @@ class SourcesSpec extends SparkTestBase {
     val path = s"$dir/polys.jsonl"
     java.nio.file.Files.writeString(java.nio.file.Paths.get(path),
       PolygonJson.toJsonLines(Polygons.all))
-    val parts = PolygonJson.read(spark, path)
-    assert(parts.map(p => (p.regionId, p.part, p.name)).sorted ==
-      Polygons.all.map(p => (p.regionId, p.part, p.name)).sorted)
-    val cover1 = PolygonJson.coverFromJson(spark, path)
+    def render(ps: Seq[(Long, Int, String, Seq[Seq[Double]])]) = ps.sortBy(p => (p._1, p._2))
+    val parts = PolygonJson.readDF(spark, path).collect().toSeq.map(r =>
+      (r.getLong(0), r.getInt(1), r.getString(2),
+        r.getSeq[scala.collection.Seq[Double]](3).map(_.toSeq).toSeq))
+    assert(render(parts) == render(Polygons.all.map(p =>
+      (p.regionId, p.part, p.name, p.rings.map(_.toSeq).toSeq))))
+    val cover1 = PolygonJson.coverFromJsonDistributed(spark, path)
     val cover2 = graft.operators.SpatialJoin.coverDF(spark, Polygons.all)
     assert(cellsOf(cover1) == cellsOf(cover2))
   }
