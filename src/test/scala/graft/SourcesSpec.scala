@@ -113,7 +113,7 @@ class SourcesSpec extends SparkTestBase {
     }
   }
 
-  test("readBoundariesDistributed filters executor-side: 10^6 irrelevant nodes, identical PolyParts") {
+  test("readBoundaries filters executor-side: 10^6 irrelevant nodes, identical PolyParts") {
     // a planet-extract-shaped input: a handful of boundary relations
     // drowning in bulk nodes/ways that have nothing to do with boundaries.
     // The distributed path (relation scan -> way join -> node join ->
