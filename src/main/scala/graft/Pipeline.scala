@@ -50,13 +50,13 @@ object Pipeline {
                     joinMode: SpatialJoin.Mode = SpatialJoin.Auto(),
                     cover: Option[SpatialJoin.CoverSides] = None): DataFrame = {
     import org.apache.spark.sql.functions._
-    // carry warc_ts through the point relation: assignRegions groups per
-    // point ROW, so row identity must hold under real Common-Crawl input
-    // where the same url recurs across crawls (url alone would collapse
-    // or double-count them — input_hint's per-url contract only pins the
-    // text invariant, not row uniqueness). Rows identical in ALL of
-    // (url, warc_ts, coords, tokens) are true duplicate records and
-    // count once.
+    // carry warc_ts through the point relation: assignRegions keeps one
+    // row per distinct point ROW, so row identity must hold under real
+    // Common-Crawl input where the same url recurs across crawls (url
+    // alone would collapse or double-count them — input_hint's per-url
+    // contract only pins the text invariant, not row uniqueness). Rows
+    // identical in ALL of (url, warc_ts, coords, tokens) are true
+    // duplicate records and count once.
     val tsCol =
       if (pages.columns.contains("warc_ts")) col("warc_ts")
       else lit(null).cast("timestamp")
@@ -69,14 +69,17 @@ object Pipeline {
     // SINGLE-SCAN shape: the left-outer spatial assign keeps every point in
     // ONE plan (SpatialJoin.assignRegions), so per-tile totals AND match
     // counts come from one aggregation over one pass — the 100-TB html
-    // column is read exactly once. (Rounds 1-4 recomputed the scan for two
-    // consumers; free in-sandbox where the page cache absorbs the second
-    // read, but a doubling of the dominant IO cost on a real object-store
-    // corpus. PipelineSpec asserts the plan now contains exactly one scan
-    // of the pages relation; FlagshipProbe A/B on the 8M corpus: one-pass
-    // 5.31 s / scan control 3.19 s (ratio 0.60) vs round-4 two-pass
-    // 5.0-5.6 s / scan 3.5 s (0.62) — parity even where the page cache
-    // makes the second scan free, strictly one html read where it is not.)
+    // column is read exactly once (PipelineSpec asserts one scan of the
+    // pages relation). Under Auto's broadcast pick the regions are looked
+    // up map-side (regions_at inside the scan's codegen stage: no explode,
+    // no join, no broadcast job), and the plan is scan -> project ->
+    // point-row dedup (exchange 1: the duplicate-record collapse above) ->
+    // partial per-tile aggregate -> exchange 2 of per-tile partials
+    // (PipelineSpec "plan: Auto flagship looks regions up map-side";
+    // annotated in docs/FLAGSHIP_PLAN.md). The shuffle modes keep the
+    // explode -> join -> regroup path. A count() of this frame still
+    // prunes the lookup and the extraction (the per-tile count reads
+    // neither), so the count() flagship (Bench) never builds the pack.
     val tiled = pts.withColumn("tile",
       GeoFunctions.cellEncode(col("lat"), col("lon"), lit(z)))
     val withRegions = SpatialJoin.assignRegions(tiled, "url",

@@ -115,12 +115,13 @@ object ScalingBench {
          |corpus — the exact action the driver bench times. Round-6
          |finding (OPTIMIZATION_r06.md §4): under `count()` Catalyst
          |prunes the unused final aggregates, which eliminates the
-         |duplicate-insensitive left joins, the probe explode, and the
+         |duplicate-insensitive point-row dedup, the map-side region
+         |lookup (`regions_at`; the packed cover is never built), and the
          |token extraction — the measured plan is scan -> geocode ->
          |cell encode -> distinct-tile aggregation. All rounds' count-based
          |flagship figures (this file and the driver's) measure that plan;
-         |the FULL pipeline (extraction + PIP refine + collect_set, noop
-         |sink per guide §1.4) is timed separately by
+         |the FULL pipeline (extraction + region lookup + point-row dedup,
+         |noop sink per guide §1.4) is timed separately by
          |`python3 perfbench/run.py --workload coverage --trace 1`. Corpus:
          |$nPages pages, 1-4 KB html each, 128 files, synthesized
          |deterministically (`graft.sources.Pages`).

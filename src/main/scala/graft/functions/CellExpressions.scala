@@ -2,8 +2,11 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.graftbridge.ColumnBridge
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions._
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext,
+  CodeGenerator, ExprCode, FalseLiteral}
+import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 
@@ -15,8 +18,9 @@ import graft.core.{Cells, Geo}
  * UDFs so they stay inside whole-stage codegen — each generated snippet is
  * a static call into graft.core, no boxing, no serialization).
  *
- * All are deterministic and null-intolerant (null in -> null out), which
- * Catalyst exploits for constant folding and filter inference.
+ * All are deterministic and, except `regions_at` (null in -> empty array),
+ * null-intolerant (null in -> null out), which Catalyst exploits for
+ * constant folding and filter inference.
  */
 object CellRuntime {
   // static entry points referenced from generated Java code
@@ -269,6 +273,50 @@ case class PipContainsPacked(first: Expression, second: Expression,
       t: Expression, q: Expression): Expression = copy(f, s, t, q)
 }
 
+/** regions_at(lat, lon) -> ARRAY<BIGINT>: the sorted distinct ids of the
+  * regions containing the point, looked up in a [[PackedCover]] read in
+  * place (the map-side form of SpatialJoin.assignRegions). Deterministic
+  * and null-safe: a null lat or lon gives the empty array, the join path's
+  * "no region", so the result is never null. The pack arrives through its
+  * broadcast handle: generated code registers it as a reference object and
+  * dereferences it once per partition; `eval` once per expression copy. */
+case class RegionsAt(left: Expression, right: Expression, cover: PackedCoverRef)
+    extends BinaryExpression with ImplicitCastInputTypes {
+  override def inputTypes: Seq[DataType] = Seq(DoubleType, DoubleType)
+  override def dataType: DataType = ArrayType(LongType, containsNull = false)
+  override def nullable: Boolean = false
+  override def prettyName: String = "regions_at"
+  override def flatArguments: Iterator[Any] = Iterator(left, right)
+
+  @transient private lazy val pack = cover.broadcast.value
+
+  override def eval(input: InternalRow): Any = {
+    val lat = left.eval(input)
+    val lon = right.eval(input)
+    if (lat == null || lon == null) PackedCover.Empty
+    else pack.regionsAt(lat.asInstanceOf[Double], lon.asInstanceOf[Double])
+  }
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val packClass = classOf[PackedCover].getName
+    val bc = ctx.addReferenceObj("coverBroadcast", cover.broadcast)
+    val pack = ctx.addMutableState(packClass, "cover",
+      v => s"$v = ($packClass) $bc.value();", forceInline = true)
+    val lat = left.genCode(ctx)
+    val lon = right.genCode(ctx)
+    ev.copy(code = code"""
+      ${lat.code}
+      ${lon.code}
+      ${CodeGenerator.javaType(dataType)} ${ev.value} =
+        (${lat.isNull} || ${lon.isNull}) ? $packClass.Empty()
+          : $pack.regionsAt(${lat.value}, ${lon.value});""",
+      isNull = FalseLiteral)
+  }
+
+  override protected def withNewChildrenInternal(l: Expression, r: Expression):
+      Expression = copy(l, r)
+}
+
 /** Column-API surface for the expressions above. */
 object GeoFunctions {
   import ColumnBridge.{column, expression}
@@ -293,6 +341,8 @@ object GeoFunctions {
   def pipPacked(lat: Column, lon: Column, flat: Column, offsets: Column): Column =
     column(PipContainsPacked(expression(lat), expression(lon),
       expression(flat), expression(offsets)))
+  def regionsAt(lat: Column, lon: Column, cover: PackedCoverRef): Column =
+    column(RegionsAt(expression(lat), expression(lon), cover))
 
   /** Squared degree-space distance — composed from built-ins so it stays
     * in codegen and mirrors the oracle SQL op order exactly. */

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.core.{Cells, Geo, Polygons}
-import graft.functions.GeoFunctions
+import graft.functions.{GeoFunctions, PackedCover, PackedCoverRef}
 
 /**
  * The flagship operator (SURVEY.md §2.C3-C6): candidate-then-refine spatial
@@ -18,9 +18,11 @@ import graft.functions.GeoFunctions
  *   -- bbox prefilter + exact ray-cast PIP refine --> matches.
  *
  * Candidate join is a plain hash-joinable equi-join: broadcast when the
- *  cover is small; explicit shuffle (sort-merge on cell) with optional key
- * salting for skewed mega-cells otherwise. Results are identical across
- * modes and parallelism — that's tested, not assumed.
+ * cover is small; explicit shuffle (sort-merge on cell) with optional key
+ * salting for skewed mega-cells otherwise. When the cover is small,
+ * [[assignRegions]] skips the join altogether and probes a packed copy of
+ * the cover in place (`regions_at`). Results are identical across modes
+ * and parallelism — that's tested, not assumed.
  */
 object SpatialJoin {
 
@@ -177,7 +179,22 @@ object SpatialJoin {
     * `nCells`       — total cover rows (the Auto broadcast/shuffle pick). */
   final case class CoverSides(cells: DataFrame, parts: DataFrame,
                               coarseCells: Array[Long], resolutions: Seq[Int],
-                              nCells: Long, rMin: Int, rMax: Int)
+                              nCells: Long, rMin: Int, rMax: Int) {
+    /** This cover packed for the map-side lookup of [[assignRegions]]
+      * (`regions_at`): collected from `cells`/`parts` and broadcast on the
+      * driver the first time a plan keeping the lookup is code-generated
+      * or shipped — never by building the cover, and never by a plan whose
+      * optimizer pruned the lookup away. */
+    val packed: PackedCoverRef = new PackedCoverRef(
+      cells.sparkSession.sparkContext, () => PackedCover(
+        cells.select("cell", "region_id", "part").collect()
+          .map(r => (r.getLong(0), r.getLong(1), r.getInt(2))),
+        parts.select(PartCols.map(col): _*).collect().map(r =>
+          PackedCover.Part(r.getLong(0), r.getInt(1),
+            r.getSeq[Double](2).toArray, r.getSeq[Int](3).toArray,
+            r.getDouble(4), r.getDouble(5), r.getDouble(6), r.getDouble(7))),
+        resolutions, rMax))
+  }
 
   // memo key is the polygon CONTENT (regionId/part/ring values as value-
   // equal Seqs — PolyPart holds Arrays whose equals is identity), never an
@@ -306,9 +323,11 @@ object SpatialJoin {
   final val CoarsePrefilterMax = 1000000
 
   /** The candidate equi-join of probes against the cover's cells for a
-    * resolved mode — the single dispatch both [[assign]] (inner) and
-    * [[assignRegions]] (left: unmatched probes must survive) share, so a
-    * new mode cannot be wired inconsistently between them.
+    * resolved mode — the single dispatch both [[assign]] (inner) and the
+    * join path of [[assignRegions]] (left: unmatched probes must survive)
+    * share, so a new mode cannot be wired inconsistently between them.
+    * Only [[assign]] reaches the Broadcast branch: [[assignRegions]] looks
+    * regions up map-side there.
     *
     * Shuffle pins sort-merge via the merge hint (explicit hash
     * partitioning on the cell key, AQE skew-split can kick in on hot
@@ -406,24 +425,32 @@ object SpatialJoin {
       .dropDuplicates(keyCol, "region_id")
   }
 
-  /** One row per input point with `regions: ARRAY<BIGINT>` — the sorted set
-    * of containing region ids (empty when none). This is the SINGLE-SCAN
-    * building block: unlike [[assign]] (inner — unmatched points drop out,
-    * so a caller needing both totals and match counts must consume the
-    * point relation twice), here every point survives the whole plan, and
-    * one downstream aggregation answers both questions. At the 100-TB tier
-    * that halves the dominant IO cost of the flagship: the html column is
-    * scanned once, not once per consumer (Pipeline.coverageStats is the
-    * caller this exists for).
+  /** One row per distinct input point row with `regions: ARRAY<BIGINT>` —
+    * the sorted set of containing region ids (empty when none). This is
+    * the SINGLE-SCAN building block: unlike [[assign]] (inner — unmatched
+    * points drop out, so a caller needing both totals and match counts
+    * must consume the point relation twice), here every point survives
+    * the whole plan, and one downstream aggregation answers both
+    * questions. At the 100-TB tier that halves the dominant IO cost of the
+    * flagship: the html column is scanned once, not once per consumer
+    * (Pipeline.coverageStats is the caller this exists for). Input rows
+    * identical in every column are one point and come out once.
     *
-    * Plan shape: coarse-rejected points keep exactly ONE null-cell probe
-    * row (a join key of null never matches, so they ride through both
-    * joins untouched — no 6x explode where a match is impossible); all
-    * joins are LEFT; the final per-point groupBy costs the same single
-    * wide shuffle [[assign]]'s dedup pays, and its partial aggregation
-    * collapses the probe explode MAP-SIDE (plan-audited: partial
-    * collect_set under the exchange), so the shuffle carries one row per
-    * point.
+    * Under [[Broadcast]] (asked for, or what [[Auto]] resolves to) the
+    * lookup is MAP-SIDE: `regions_at(lat, lon)` probes the cover's
+    * [[CoverSides.packed]] in place inside the scan's codegen stage — no
+    * probe explode, no join, no broadcast job — and `dropDuplicates`
+    * collapses identical rows over the narrow point row, `regions` among
+    * its keys (a pure function of lat/lon, so it never splits a group and
+    * the collapse needs no `first()` buffer). That dedup is the plan's one
+    * point-row exchange.
+    *
+    * The shuffle modes keep the join path, which is also the parity
+    * reference of the lookup: coarse-rejected points keep exactly ONE
+    * null-cell probe row (a null key never matches, so they ride through
+    * both LEFT joins untouched — no explode where a match is impossible),
+    * and the per-point groupBy's partial aggregation collapses the probe
+    * explode map-side, so its shuffle carries one row per point.
     *
     * Single-scan caveat: ShuffleSaltedAdaptive's hot-cell detection runs
     * a separate counting job over the probe side, i.e. a second scan of
@@ -433,7 +460,19 @@ object SpatialJoin {
     * state), Broadcast/Shuffle/ShuffleSalted, or pre-materialize the
     * narrow point frame. */
   def assignRegions(points: DataFrame, keyCol: String, cover: CoverSides,
-                    mode: Mode = Auto()): DataFrame = {
+                    mode: Mode = Auto()): DataFrame =
+    resolveMode(mode, cover) match {
+      case Broadcast =>
+        points.withColumn("regions",
+            GeoFunctions.regionsAt(col("lat"), col("lon"), cover.packed))
+          .dropDuplicates()
+      case joinMode => regionsByJoin(points, keyCol, cover, joinMode)
+    }
+
+  /** [[assignRegions]] for the shuffle modes: explode → left join the
+    * cover cells → left join the parts → refine → regroup per point row. */
+  private def regionsByJoin(points: DataFrame, keyCol: String,
+                            cover: CoverSides, mode: Mode): DataFrame = {
     import points.sparkSession.implicits._
     val rMin = cover.rMin
     val rMax = cover.rMax

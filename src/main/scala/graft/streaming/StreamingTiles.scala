@@ -70,7 +70,10 @@ object StreamingTiles {
     * increment run through the exact batch plan (Pipeline.coverageStats
     * over SpatialJoin.assignRegions), so stream == batch semantics hold
     * by construction; per-tile roll-up across batches is a plain
-    * downstream aggregation (counts and token sums are additive).
+    * downstream aggregation (counts and token sums are additive). The
+    * fixture cover is built once per sink, not per batch: under Auto it
+    * resolves to the map-side lookup, whose packed cover is then built
+    * and broadcast by the first batch and reused by every later one.
     *
     * `joinMode`: the streaming deployment IS the crawl-cycle steady
     * state [[graft.operators.SpatialJoin.ShuffleSaltedHot]] was built
@@ -82,15 +85,17 @@ object StreamingTiles {
                    z: Int = 8,
                    joinMode: graft.operators.SpatialJoin.Mode =
                      graft.operators.SpatialJoin.Auto())
-      : DataStreamWriter[org.apache.spark.sql.Row] =
+      : DataStreamWriter[org.apache.spark.sql.Row] = {
+    val cover = SpatialJoin.coverDF(spark)
     pages.writeStream
       .outputMode(OutputMode.Update())
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        Pipeline.coverageStats(spark, batch, z, joinMode)
+        Pipeline.coverageStats(spark, batch, z, joinMode, Some(cover))
           .withColumn("batch_id", lit(batchId))
           .write.mode("append").parquet(outPath)
       }
       .trigger(Trigger.AvailableNow())
+  }
 
   /** Streaming incremental dedup — K27's streaming twin: a continuous
     * stream of NEW documents filtered against a STATIC kept corpus. The

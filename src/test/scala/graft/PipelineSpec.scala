@@ -416,10 +416,64 @@ class PipelineSpec extends SparkTestBase {
       // the round-5 single-scan shape fused the two aggregation branches
       // into one chain: 3 spans now cover the whole flagship (was 4)
       assert(spans >= 3, s"expected >=3 codegen spans, got $spans")
-      // custom expressions run INSIDE codegen stages (star-prefixed nodes)
-      assert(plan.contains("pip_contains"), "pip in plan")
+      // custom expressions run INSIDE codegen stages (star-prefixed nodes):
+      // the map-side region lookup on the default (Auto -> Broadcast)
+      // plan, the packed ray cast on the shuffle join path
+      assert(plan.contains("regions_at"), "region lookup in plan")
       assert(!plan.contains("CodegenFallback"), "no fallback")
+      val sPlan = Pipeline.coverageStats(spark, pages, 8, SpatialJoin.Shuffle)
+        .queryExecution.executedPlan.toString
+      assert(sPlan.contains("pip_contains"), "pip in shuffle plan")
+      assert(!sPlan.contains("CodegenFallback"), "no fallback (shuffle)")
     } finally spark.conf.set("spark.sql.adaptive.enabled", "true")
+  }
+
+  test("plan: Auto flagship looks regions up map-side; Shuffle keeps the join") {
+    import org.apache.spark.sql.execution.GenerateExec
+    import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec,
+      ShuffleExchangeExec}
+    import org.apache.spark.sql.execution.joins.BaseJoinExec
+    val pages = Pages.synthesize(spark, 200, 2)
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try {
+      val exec = Pipeline.coverageStats(spark, pages, 8)
+        .queryExecution.executedPlan
+      // no probe explode, no candidate/refine join, no broadcast build
+      assert(exec.collect { case g: GenerateExec => g }.isEmpty, exec)
+      assert(exec.collect { case j: BaseJoinExec => j }.isEmpty, exec)
+      assert(exec.collect { case b: BroadcastExchangeExec => b }.isEmpty, exec)
+      // two shuffles: the point-row dedup (byte-identical records collapse,
+      // "counts per crawl record" below) and the per-tile partials
+      assert(exec.collect { case e: ShuffleExchangeExec => e }.length == 2, exec)
+      // the lookup runs inside a whole-stage codegen stage
+      val lookup = exec.toString.linesIterator
+        .filter(_.contains("regions_at(")).toList
+      assert(lookup.nonEmpty &&
+        lookup.forall("\\*\\(\\d+\\) ".r.findFirstIn(_).nonEmpty), lookup)
+      // the shuffle mode keeps the explode -> join -> refine parity path
+      val sPlan = Pipeline.coverageStats(spark, pages, 8, SpatialJoin.Shuffle)
+        .queryExecution.executedPlan.toString
+      assert(sPlan.contains("SortMergeJoin") &&
+        sPlan.contains("pip_contains_packed") && !sPlan.contains("regions_at"), sPlan)
+    } finally spark.conf.set("spark.sql.adaptive.enabled", "true")
+  }
+
+  test("pruned flagship: count() keeps no lookup, no extraction, builds no pack") {
+    // Bench's count() flagship times a Catalyst-pruned plan:
+    // the per-tile count never reads regions or tokens, so neither the
+    // lookup nor the token extraction may survive — and the packed cover
+    // must not be built (it would land in every count() timing)
+    val pages = Pages.synthesize(spark, 300, 4)
+    val cover = SpatialJoin.coverDF(spark)
+    val stats = Pipeline.coverageStats(spark, pages, 8, SpatialJoin.Auto(), Some(cover))
+    val plan = stats.groupBy().count().queryExecution.optimizedPlan.toString
+    assert(!plan.contains("regions_at") && !plan.contains("token_count") &&
+      !plan.contains("extract_text"), plan)
+    assert(stats.count() > 0)
+    assert(!cover.packed.isBuilt)
+    // positive control: a plan that keeps the lookup builds the pack
+    stats.write.format("noop").mode("overwrite").save()
+    assert(cover.packed.isBuilt)
   }
 
   test("coverageStats equals a naive recomputation") {

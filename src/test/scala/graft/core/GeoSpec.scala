@@ -150,5 +150,37 @@ class GeoSpec extends AnyFunSuite with PropHelpers {
           s"${p.name} at ($lat, $lon)")
       }
     }
+    // the packed cover's refine (regions_at) runs the same kernel: one part
+    // under the root cell, so every point is a candidate and the answer is
+    // exactly bbox && ray cast — equal to Geo.contains, vertices and edge
+    // midpoints included (the bbox test is inclusive, so it never rejects
+    // a point the ray cast would accept)
+    import graft.functions.PackedCover
+    def rootPack(p: Polygons.PolyPart) = PackedCover(
+      Array((Cells.mkCell(0, 0L), p.regionId, p.part)),
+      Array(PackedCover.Part(p.regionId, p.part, p.rings.flatten,
+        p.rings.scanLeft(0)(_ + _.length), p.latMin, p.latMax, p.lonMin,
+        p.lonMax)),
+      Seq(0), 12)
+    Polygons.all.foreach { p =>
+      val pack = rootPack(p)
+      val onBoundary = p.rings.toSeq.flatMap { ring =>
+        val n = ring.length / 2
+        (0 until n).flatMap { i =>
+          val j = (i + 1) % n
+          Seq((ring(2 * i + 1), ring(2 * i)),
+            ((ring(2 * i + 1) + ring(2 * j + 1)) / 2, (ring(2 * i) + ring(2 * j)) / 2))
+        }
+      }
+      val inBox = Gen.zip(Gen.choose(p.latMin - 0.5, p.latMax + 0.5),
+        Gen.choose(p.lonMin - 0.5, p.lonMax + 0.5))
+      val sampled = (0 until propRuns).map(i =>
+        inBox.pureApply(Gen.Parameters.default, org.scalacheck.rng.Seed(i.toLong)))
+      (onBoundary ++ sampled).foreach { case (lat, lon) =>
+        val hit = pack.regionsAt(lat, lon).toLongArray().toSeq
+        assert(hit == (if (Geo.contains(lat, lon, p.rings)) Seq(p.regionId) else Nil),
+          s"${p.name} at ($lat, $lon)")
+      }
+    }
   }
 }
