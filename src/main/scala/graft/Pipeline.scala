@@ -8,8 +8,8 @@ import graft.operators.{SpatialJoin, TileAgg}
 
 /**
  * The flagship end-to-end pipeline (SURVEY.md §3.1 E1 / §7 M1): pages ->
- * extract + geocode -> cell encode -> candidate cover join -> exact PIP
- * refine -> per-region matches + tile aggregation.
+ * extract + geocode -> region lookup (map-side, or candidate cover join +
+ * exact PIP refine) -> per-region matches + tile aggregation.
  *
  * Column-pruning discipline: `html` (BINARY, the huge column) is consumed
  * exactly once at geocode/extract time; everything downstream carries only
@@ -25,10 +25,12 @@ object Pipeline {
         TextFunctions.geoLon(col("html")).as("lon"))
       .where(col("lat").isNotNull && col("lon").isNotNull)
 
-  /** (url, lat, lon, region_id) exact region matches. `cover` defaults to
-    * the committed fixture polygons; for real boundary inputs pass one
-    * built by SpatialJoin.coverDFDistributed (polygon files and OSM
-    * relations) or SpatialJoin.coverDF (an in-memory PolyPart seq). */
+  /** (region_id, url, lat, lon) exact region matches: SpatialJoin.assign,
+    * map-side under Auto's broadcast pick, else the shuffle join. `cover`
+    * defaults to the committed fixture polygons; for real boundary inputs
+    * pass one built by SpatialJoin.coverDFDistributed (polygon files and
+    * OSM relations) or SpatialJoin.coverDF (an in-memory PolyPart seq).
+    * Pass one cover across batches, so its pack is built once. */
   def matches(spark: SparkSession, pages: DataFrame,
               mode: SpatialJoin.Mode = SpatialJoin.Auto(),
               cover: Option[SpatialJoin.CoverSides] = None): DataFrame =
@@ -97,7 +99,8 @@ object Pipeline {
     * already recorded complete in the lineage table -> spatial join ->
     * partitioned write + lineage append. A killed run re-invoked with the
     * same runId recomputes ONLY the uncompleted cell prefixes. Returns the
-    * number of input points actually processed this invocation. */
+    * number of input points actually processed this invocation. Regions
+    * come from SpatialJoin.assign, as in [[matches]]. */
   def runResumable(spark: SparkSession, pages: DataFrame, outPath: String,
                    lineagePath: String, runId: String,
                    mode: SpatialJoin.Mode = SpatialJoin.Auto(),

@@ -275,7 +275,8 @@ case class PipContainsPacked(first: Expression, second: Expression,
 
 /** regions_at(lat, lon) -> ARRAY<BIGINT>: the sorted distinct ids of the
   * regions containing the point, looked up in a [[PackedCover]] read in
-  * place (the map-side form of SpatialJoin.assignRegions). Deterministic
+  * place (the Broadcast form of SpatialJoin.assign, which explodes it,
+  * and of SpatialJoin.assignRegions, which keeps it whole). Deterministic
   * and null-safe: a null lat or lon gives the empty array, the join path's
   * "no region", so the result is never null. The pack arrives through its
   * broadcast handle: generated code registers it as a reference object and

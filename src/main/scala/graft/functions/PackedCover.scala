@@ -12,11 +12,13 @@ import graft.core.Cells
  * cover cells as one sorted `long[]` with a part index per entry, and per
  * part its region id, bbox and packed rings (the `pip_contains_packed`
  * layout: flat [lon,lat,...] vertices + ring start offsets). Read-only
- * once built; executors receive it as one broadcast.
+ * once built; executors receive it as one broadcast. It serves both
+ * region lookups of the Broadcast mode: SpatialJoin.assign and
+ * SpatialJoin.assignRegions.
  *
  * The entries are exactly the rows of the cover's cells ⋈ parts equi-join
- * on (region_id, part), so a lookup sees the same candidates as
- * SpatialJoin's explode → join → refine path, refines them with the same
+ * on (region_id, part), so a lookup sees the same candidates as the
+ * shuffle modes' explode → join → refine path, refines them with the same
  * bbox conjunction and the same ray cast (CellRuntime.pipPacked), and
  * returns the same region set.
  */

@@ -17,12 +17,12 @@ import graft.functions.{GeoFunctions, PackedCover, PackedCoverRef}
  *   resolution in the id, so ONE equi-join covers all resolutions)
  *   -- bbox prefilter + exact ray-cast PIP refine --> matches.
  *
- * Candidate join is a plain hash-joinable equi-join: broadcast when the
- * cover is small; explicit shuffle (sort-merge on cell) with optional key
- * salting for skewed mega-cells otherwise. When the cover is small,
- * [[assignRegions]] skips the join altogether and probes a packed copy of
- * the cover in place (`regions_at`). Results are identical across modes
- * and parallelism — that's tested, not assumed.
+ * When the cover is small (Broadcast, or what Auto resolves to) there is
+ * no join at all: [[assign]] and [[assignRegions]] probe a packed copy of
+ * the cover in place (`regions_at`). Otherwise the candidate join is an
+ * explicit shuffle (sort-merge on cell) with optional key salting for
+ * skewed mega-cells. Results are identical across modes and parallelism —
+ * that's tested, not assumed.
  */
 object SpatialJoin {
 
@@ -150,9 +150,9 @@ object SpatialJoin {
   final val RMin = 7
   final val RMax = 12
 
-  /** The polygon side, split in two for broadcast economy:
+  /** The polygon side, split in two so rings travel once per part:
     * `cells`  — one narrow row per compact-cover cell (cell, region_id,
-    *            part): this is what the big candidate join broadcasts
+    *            part): this is what the candidate join shuffles
     *            (24 bytes/row, NOT rings duplicated 27k times);
     * `parts`  — one row per polygon part carrying rings + bbox, joined to
     *            candidates only (a second, trivially small broadcast).
@@ -180,11 +180,11 @@ object SpatialJoin {
   final case class CoverSides(cells: DataFrame, parts: DataFrame,
                               coarseCells: Array[Long], resolutions: Seq[Int],
                               nCells: Long, rMin: Int, rMax: Int) {
-    /** This cover packed for the map-side lookup of [[assignRegions]]
-      * (`regions_at`): collected from `cells`/`parts` and broadcast on the
-      * driver the first time a plan keeping the lookup is code-generated
-      * or shipped — never by building the cover, and never by a plan whose
-      * optimizer pruned the lookup away. */
+    /** This cover packed for the map-side lookup of [[assign]] and
+      * [[assignRegions]] (`regions_at`): collected from `cells`/`parts`
+      * and broadcast on the driver the first time a plan keeping the
+      * lookup is code-generated or shipped — never by building the cover,
+      * and never by a plan whose optimizer pruned the lookup away. */
     val packed: PackedCoverRef = new PackedCoverRef(
       cells.sparkSession.sparkContext, () => PackedCover(
         cells.select("cell", "region_id", "part").collect()
@@ -275,11 +275,11 @@ object SpatialJoin {
     * summary does (one small aggregation job: distinct rMin-ancestors,
     * distinct resolutions, row count; see CoverSides). The cells side is
     * materialized once (localCheckpoint) since the summary job and the
-    * candidate join both consume it.
+    * candidate join (or the pack) both consume it.
     *
     * Per-polygon results are bit-identical to [[coverDF]]'s — same pure
-    * Geo.cover, asserted by PipelineSpec — so broadcast and shuffle joins
-    * behave identically over either construction. */
+    * Geo.cover, asserted by PipelineSpec — so the map-side lookup and the
+    * shuffle joins behave identically over either construction. */
   def coverDFDistributed(polygons: DataFrame,
                          rMin: Int = RMin, rMax: Int = RMax): CoverSides = {
     val spark = polygons.sparkSession
@@ -323,11 +323,11 @@ object SpatialJoin {
   final val CoarsePrefilterMax = 1000000
 
   /** The candidate equi-join of probes against the cover's cells for a
-    * resolved mode — the single dispatch both [[assign]] (inner) and the
-    * join path of [[assignRegions]] (left: unmatched probes must survive)
-    * share, so a new mode cannot be wired inconsistently between them.
-    * Only [[assign]] reaches the Broadcast branch: [[assignRegions]] looks
-    * regions up map-side there.
+    * resolved shuffle mode — the single dispatch both [[assign]] (inner)
+    * and [[assignRegions]] (left: unmatched probes must survive) share
+    * through [[refinedCandidates]], so a new mode cannot be wired
+    * inconsistently between them. Broadcast never gets here: both look
+    * regions up map-side under it.
     *
     * Shuffle pins sort-merge via the merge hint (explicit hash
     * partitioning on the cell key, AQE skew-split can kick in on hot
@@ -339,10 +339,7 @@ object SpatialJoin {
                             keyCol: String, mode: Mode,
                             joinType: String): DataFrame = {
     import probes.sparkSession.implicits._
-    resolveMode(mode, cover) match {
-      case Auto(_) => throw new IllegalStateException("Auto resolved above")
-      case Broadcast =>
-        probes.join(broadcast(cover.cells), Seq("cell"), joinType)
+    mode match {
       case Shuffle =>
         probes.join(cover.cells.hint("merge"), Seq("cell"), joinType)
       case ShuffleSalted(s) =>
@@ -372,56 +369,78 @@ object SpatialJoin {
           probes.join(cover.cells.hint("merge"), Seq("cell"), joinType)
         else saltedSplitJoin(probes, cover.cells, keyCol, s,
           c => hotCellPredicate(c, m), joinType)
+      case m =>
+        throw new IllegalStateException(s"$m has no candidate join")
     }
   }
 
-  /** Assign containing regions to points. Input must carry `lat`,`lon` and
-    * a unique key column `keyCol`; output = input columns + region_id
-    * (inner; points in no region drop out), exactly one row per
-    * (point, region). */
-  def assign(points: DataFrame, keyCol: String, cover: CoverSides,
-             mode: Mode = Auto()): DataFrame = {
+  /** The probe → candidate → refine rows of the shuffle modes, shared by
+    * [[assign]] (`joinType` inner) and [[assignRegions]] (left): encode
+    * `cell_rmax`, explode each point into its ancestor at every resolution
+    * the cover uses, [[candidateJoin]] the cover cells, join the parts and
+    * add the boolean refine column `ok` (bbox, then the packed ray cast).
+    *
+    * The coarse test runs BEFORE the probe explode: a matching point's
+    * rMin-ancestor must be the rMin-ancestor of some cover cell, and that
+    * set is tiny (bounded by the global rMin grid), so one InSet lookup
+    * spares most of the planet's points the explode and the join. Skipped
+    * past CoarsePrefilterMax (the join itself is the correctness filter).
+    * A rejected point keeps exactly ONE null-cell probe row: a null key
+    * never matches, so the inner join drops it (Catalyst infers
+    * `isnotnull(cell)` below the exchange) and the left joins carry it
+    * through unmatched, with a null `ok`. In the salted modes the hot
+    * test coalesces to false on it, so it takes the cold path once. */
+  private def refinedCandidates(points: DataFrame, keyCol: String,
+                                cover: CoverSides, mode: Mode,
+                                joinType: String): DataFrame = {
     import points.sparkSession.implicits._
     val rMin = cover.rMin
-    val rMax = cover.rMax
-    // coarse prefilter BEFORE the 6-way probe explode: a matching point's
-    // rMin-ancestor must be the rMin-ancestor of some cover cell, and that
-    // set is tiny (bounded by the global rMin grid) — an InSet lookup
-    // eliminates most of the planet's points with one cell computation
-    // instead of a 6x row blowup + join. Skipped past CoarsePrefilterMax
-    // (the join itself is the correctness filter).
     val encoded = points.withColumn("cell_rmax",
-      GeoFunctions.cellEncode($"lat", $"lon", lit(rMax)))
-    val withCell =
-      if (cover.coarseCells.length > CoarsePrefilterMax) encoded
-      else encoded.where(GeoFunctions.cellParent($"cell_rmax", lit(rMin))
-        .isInCollection(cover.coarseCells.map(Long.box)))
+      GeoFunctions.cellEncode($"lat", $"lon", lit(cover.rMax)))
+    val coarseOk: Column =
+      if (cover.coarseCells.length > CoarsePrefilterMax) lit(true)
+      else GeoFunctions.cellParent($"cell_rmax", lit(rMin))
+        .isInCollection(cover.coarseCells.map(Long.box))
     // probe only the resolutions that actually OCCUR in the cover (in the
     // driver-side summary at zero job cost): a compact cover rarely uses
     // every level — e.g. a coarse-only cover of a large region makes the
     // candidate explode 1x instead of (rMax-rMin+1)x per point
     val probeRes: Seq[Int] =
       if (cover.resolutions.isEmpty) Seq(rMin) else cover.resolutions
-    val probes = withCell.withColumn("cell",
-      explode(array(probeRes.map(r =>
-        GeoFunctions.cellParent($"cell_rmax", lit(r))): _*)))
-
-    val candidates = candidateJoin(probes, cover, keyCol, mode, "inner")
-
+    val probes = encoded.withColumn("cell",
+      explode(when(coarseOk, array(probeRes.map(r =>
+          GeoFunctions.cellParent($"cell_rmax", lit(r))): _*))
+        .otherwise(array(lit(null).cast("long")))))
     // refine only candidates: tiny (region,part)->rings dim broadcast;
     // PIP reads the packed vertex array in place (no per-row allocation)
-    val refined = candidates
-      .join(broadcast(cover.parts), Seq("region_id", "part"))
-      .where($"lat" >= $"lat_min" && $"lat" <= $"lat_max" &&
-             $"lon" >= $"lon_min" && $"lon" <= $"lon_max")
-      .where(GeoFunctions.pipPacked($"lat", $"lon",
-        $"rings_flat", $"ring_offsets"))
+    candidateJoin(probes, cover, keyCol, mode, joinType)
+      .join(broadcast(cover.parts), Seq("region_id", "part"), joinType)
+      .withColumn("ok", $"lat" >= $"lat_min" && $"lat" <= $"lat_max" &&
+        $"lon" >= $"lon_min" && $"lon" <= $"lon_max" &&
+        GeoFunctions.pipPacked($"lat", $"lon", $"rings_flat", $"ring_offsets"))
+  }
 
-    // a region can match via several parts; compact cover cells are
-    // disjoint so per part there is at most one candidate row
-    refined.drop("cell", "cell_rmax", "part",
-        "rings_flat", "ring_offsets",
-        "lat_min", "lat_max", "lon_min", "lon_max")
+  /** Assign containing regions to points. Input must carry `lat`,`lon` and
+    * a unique key column `keyCol`; output = `region_id`, then the input
+    * columns (inner; points in no region drop out), exactly one row per
+    * (point, region).
+    *
+    * Under [[Broadcast]] (asked for, or what [[Auto]] resolves to) each
+    * point explodes its `regions_at` set — the map-side lookup of
+    * [[assignRegions]], no join. The shuffle modes keep the `ok` rows of
+    * [[refinedCandidates]]; a region can match via several parts, hence
+    * the dedup. */
+  def assign(points: DataFrame, keyCol: String, cover: CoverSides,
+             mode: Mode = Auto()): DataFrame = {
+    val matched = resolveMode(mode, cover) match {
+      case Broadcast =>
+        points.withColumn("region_id", explode(
+          GeoFunctions.regionsAt(col("lat"), col("lon"), cover.packed)))
+      case joinMode =>
+        refinedCandidates(points, keyCol, cover, joinMode, "inner")
+          .where(col("ok"))
+    }
+    matched.select(col("region_id") +: points.columns.map(col): _*)
       .dropDuplicates(keyCol, "region_id")
   }
 
@@ -445,12 +464,10 @@ object SpatialJoin {
     * the collapse needs no `first()` buffer). That dedup is the plan's one
     * point-row exchange.
     *
-    * The shuffle modes keep the join path, which is also the parity
-    * reference of the lookup: coarse-rejected points keep exactly ONE
-    * null-cell probe row (a null key never matches, so they ride through
-    * both LEFT joins untouched — no explode where a match is impossible),
-    * and the per-point groupBy's partial aggregation collapses the probe
-    * explode map-side, so its shuffle carries one row per point.
+    * The shuffle modes regroup the left-joined [[refinedCandidates]] per
+    * point row (the lookup's parity reference, `RegionsAtSpec`); the
+    * groupBy's partial aggregation collapses the probe explode map-side,
+    * so its shuffle carries one row per point.
     *
     * Single-scan caveat: ShuffleSaltedAdaptive's hot-cell detection runs
     * a separate counting job over the probe side, i.e. a second scan of
@@ -466,49 +483,12 @@ object SpatialJoin {
         points.withColumn("regions",
             GeoFunctions.regionsAt(col("lat"), col("lon"), cover.packed))
           .dropDuplicates()
-      case joinMode => regionsByJoin(points, keyCol, cover, joinMode)
+      case joinMode =>
+        refinedCandidates(points, keyCol, cover, joinMode, "left")
+          .groupBy(points.columns.map(col): _*)
+          .agg(sort_array(collect_set(when(col("ok"), col("region_id"))))
+            .as("regions"))
     }
-
-  /** [[assignRegions]] for the shuffle modes: explode → left join the
-    * cover cells → left join the parts → refine → regroup per point row. */
-  private def regionsByJoin(points: DataFrame, keyCol: String,
-                            cover: CoverSides, mode: Mode): DataFrame = {
-    import points.sparkSession.implicits._
-    val rMin = cover.rMin
-    val rMax = cover.rMax
-    val encoded = points.withColumn("cell_rmax",
-      GeoFunctions.cellEncode($"lat", $"lon", lit(rMax)))
-    val coarseOk: Column =
-      if (cover.coarseCells.length > CoarsePrefilterMax) lit(true)
-      else GeoFunctions.cellParent($"cell_rmax", lit(rMin))
-        .isInCollection(cover.coarseCells.map(Long.box))
-    val probeRes: Seq[Int] =
-      if (cover.resolutions.isEmpty) Seq(rMin) else cover.resolutions
-    val probes = encoded.withColumn("cell",
-      explode(when(coarseOk, array(probeRes.map(r =>
-          GeoFunctions.cellParent($"cell_rmax", lit(r))): _*))
-        .otherwise(array(lit(null).cast("long")))))
-
-    // null cells (coarse-rejected points) must land in exactly one salted
-    // branch: saltedSplitJoin coalesces the hot test to false, so they
-    // take the cold path, where a null key matches nothing and the left
-    // join keeps the row
-    val candidates = candidateJoin(probes, cover, keyCol, mode, "left")
-
-    val refined = candidates
-      .join(broadcast(cover.parts), Seq("region_id", "part"), "left")
-    // null-propagating: unmatched rows have null region/rings, so `ok`
-    // evaluates null -> coalesced to false below
-    val ok = $"region_id".isNotNull &&
-      $"lat" >= $"lat_min" && $"lat" <= $"lat_max" &&
-      $"lon" >= $"lon_min" && $"lon" <= $"lon_max" &&
-      GeoFunctions.pipPacked($"lat", $"lon", $"rings_flat", $"ring_offsets")
-    val ptCols = points.columns.map(col)
-    refined
-      .groupBy(ptCols: _*)
-      .agg(sort_array(collect_set(when(coalesce(ok, lit(false)), $"region_id")))
-        .as("regions"))
-  }
 
   /** LEFT-OUTER [[assign]]: every input point survives — matched points get
     * one row per containing region, unmatched points one row with NULL

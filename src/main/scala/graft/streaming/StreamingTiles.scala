@@ -52,17 +52,21 @@ object StreamingTiles {
       .dropDuplicatesWithinWatermark("html_md5")
 
   /** Batch-parity variant: stream -> foreachBatch -> the batch pipeline,
-    * appending matches to a parquet sink. */
+    * appending matches to a parquet sink. The fixture cover is built once
+    * per sink, as in [[coverageSink]], so the packed cover of the map-side
+    * lookup is built by the first batch and reused. */
   def matchesSink(spark: SparkSession, pages: DataFrame,
-                  outPath: String): DataStreamWriter[org.apache.spark.sql.Row] =
+                  outPath: String): DataStreamWriter[org.apache.spark.sql.Row] = {
+    val cover = SpatialJoin.coverDF(spark)
     pages.writeStream
       .outputMode(OutputMode.Update())
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        Pipeline.matches(spark, batch)
+        Pipeline.matches(spark, batch, cover = Some(cover))
           .withColumn("batch_id", lit(batchId))
           .write.mode("append").parquet(outPath)
       }
       .trigger(Trigger.AvailableNow())
+  }
 
   /** Streaming twin of the round-5 single-scan flagship: per-micro-batch
     * coverage stats (tile_x, tile_y, pages, tok_sum, matched, batch_id)

@@ -45,9 +45,15 @@ class PipelineSpec extends SparkTestBase {
   test("join modes (broadcast / shuffle / salted) return identical rows") {
     val pts = GeoFixtures.points(spark, sfDir)
     val cover = SpatialJoin.coverDF(spark)
-    def run(m: SpatialJoin.Mode) =
-      SpatialJoin.assign(pts, "k", cover, m).select("k", "region_id")
+    // one output schema under every mode: region_id, then the input columns
+    val schema = SpatialJoin.assign(pts, "k", cover, SpatialJoin.Broadcast).schema
+    assert(schema.fieldNames.toSeq == "region_id" +: pts.columns.toSeq, schema)
+    def run(m: SpatialJoin.Mode) = {
+      val df = SpatialJoin.assign(pts, "k", cover, m)
+      assert(df.schema == schema, s"$m: ${df.schema}")
+      df.select("k", "region_id")
         .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    }
     val b = run(SpatialJoin.Broadcast)
     assert(b.nonEmpty)
     assert(run(SpatialJoin.Shuffle) == b)
@@ -276,16 +282,21 @@ class PipelineSpec extends SparkTestBase {
       graft.core.Cells.mkCell(20, i.toLong))
     val inflated = cover.copy(coarseCells = cover.coarseCells ++ junk)
     val pts = GeoFixtures.points(spark, sfDir)
+    // Shuffle: the join path is the one that reads coarseCells (the
+    // map-side lookup of Broadcast/Auto never does)
     def run(c: SpatialJoin.CoverSides) =
-      SpatialJoin.assign(pts, "k", c).select("k", "region_id")
+      SpatialJoin.assign(pts, "k", c, SpatialJoin.Shuffle).select("k", "region_id")
         .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val base = run(cover)
     assert(base.nonEmpty && run(inflated) == base)
-    // and the inflated plan genuinely lacks the literal IN filter
-    val plan = SpatialJoin.assign(pts, "k", inflated)
-      .queryExecution.optimizedPlan.toString
-    assert(!plan.contains("isInCollection") && !plan.toLowerCase.contains(" in ("),
-      plan.take(500))
+    // the base plan has the literal IN filter, the inflated one lacks it
+    def plan(c: SpatialJoin.CoverSides) = SpatialJoin.assign(pts, "k", c,
+      SpatialJoin.Shuffle).queryExecution.optimizedPlan.toString
+    assert(plan(cover).contains(" INSET "), plan(cover).take(1500))
+    val inflatedPlan = plan(inflated)
+    assert(!inflatedPlan.contains(" INSET ") &&
+      !inflatedPlan.contains("isInCollection") &&
+      !inflatedPlan.toLowerCase.contains(" in ("), inflatedPlan.take(500))
   }
 
   test("distributed cover of an EMPTY polygon relation joins to zero rows, no crash") {
@@ -323,11 +334,14 @@ class PipelineSpec extends SparkTestBase {
     val cover88 = SpatialJoin.coverDF(spark, quad, rMin = 8, rMax = 8)
     assert(cover88.resolutions == Seq(8))
     val pts = GeoFixtures.points(spark, sfDir)
-    val df = SpatialJoin.assign(pts, "k", cover88)
-    // the Generate explodes exactly ONE parent (not rMax-rMin+1 of them)
+    // Shuffle: the join path is the one that explodes probes
+    val df = SpatialJoin.assign(pts, "k", cover88, SpatialJoin.Shuffle)
+    // the Generate explodes exactly ONE parent (not rMax-rMin+1 of them);
+    // the coarse test shares its line, so count inside the exploded array
     val gen = df.queryExecution.optimizedPlan.toString
       .linesIterator.find(_.contains("explode")).get
-    assert("cell_parent".r.findAllIn(gen).size == 1, gen)
+    val exploded = gen.substring(gen.indexOf("array("))
+    assert("cell_parent".r.findAllIn(exploded).size == 1, gen)
     // semantics unchanged: equals the naive per-point ray cast
     val got = df.select("k", "region_id").collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
@@ -393,15 +407,39 @@ class PipelineSpec extends SparkTestBase {
       plan.contains("GreaterThan(l_quantity,45"), plan.take(2000))
   }
 
-  test("plan: broadcast mode uses BroadcastHashJoin, shuffle uses SortMergeJoin") {
+  test("plan: broadcast assign looks regions up map-side, shuffle uses SortMergeJoin") {
+    import org.apache.spark.sql.execution.{FilterExec, GenerateExec}
+    import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec,
+      ShuffleExchangeExec}
+    import org.apache.spark.sql.execution.joins.BaseJoinExec
     val pts = GeoFixtures.points(spark, sfDir)
     val cover = SpatialJoin.coverDF(spark)
-    val bPlan = SpatialJoin.assign(pts, "k", cover, SpatialJoin.Broadcast)
-      .queryExecution.executedPlan.toString
-    assert(bPlan.contains("BroadcastHashJoin"), bPlan.take(1500))
-    val sPlan = SpatialJoin.assign(pts, "k", cover, SpatialJoin.Shuffle)
-      .queryExecution.executedPlan.toString
-    assert(sPlan.contains("SortMergeJoin"), sPlan.take(1500))
+    // AQE off: the adaptive root would hide the operators from collect
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try {
+      for (m <- Seq(SpatialJoin.Broadcast, SpatialJoin.Auto())) {
+        val bExec = SpatialJoin.assign(pts, "k", cover, m)
+          .queryExecution.executedPlan
+        assert(bExec.toString.contains("regions_at"), bExec)
+        assert(bExec.collect { case j: BaseJoinExec => j }.isEmpty, bExec)
+        assert(bExec.collect { case b: BroadcastExchangeExec => b }.isEmpty, bExec)
+      }
+      val sExec = SpatialJoin.assign(pts, "k", cover, SpatialJoin.Shuffle)
+        .queryExecution.executedPlan
+      val sPlan = sExec.toString
+      assert(sPlan.contains("SortMergeJoin") &&
+        sPlan.contains("pip_contains_packed") && !sPlan.contains("regions_at"), sPlan)
+      // coarse-rejected points' null-cell probe rows are filtered out
+      // between the probe explode and the exchange, never shuffled
+      val probeExchanges = sExec.collect {
+        case e: ShuffleExchangeExec
+            if e.find(_.isInstanceOf[GenerateExec]).isDefined => e }
+      assert(probeExchanges.nonEmpty && probeExchanges.forall(_.child.exists {
+        case f: FilterExec => f.condition.toString.contains("isnotnull(cell#") &&
+          f.child.find(_.isInstanceOf[GenerateExec]).isDefined
+        case _ => false
+      }), sPlan)
+    } finally spark.conf.set("spark.sql.adaptive.enabled", "true")
   }
 
 

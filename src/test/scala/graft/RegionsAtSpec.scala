@@ -8,13 +8,14 @@ import org.scalacheck.rng.Seed
 import graft.core.{Cells, Geo, Polygons}
 import graft.operators.SpatialJoin
 
-/** Differential spec of the map-side region lookup: `assignRegions` under
-  * Broadcast (`regions_at` over the packed cover) must return exactly the
-  * rows of the Shuffle join path (explode → join → refine → regroup) on
-  * random points and on points picked to break it — on r12 cell edges, on
-  * polygon vertices and edges, inside holes, in the second part of a
-  * multipart region, outside every coarse cell, at the poles and the
-  * antimeridian, with null coordinates and with duplicated input rows. */
+/** Differential spec of the map-side region lookup: `assignRegions`,
+  * `assign` and `assignOuter` under Broadcast (`regions_at` over the packed
+  * cover) must return exactly the rows of the Shuffle join path (explode →
+  * join → refine, then regroup or dedup) on random points and on points
+  * picked to break it — on r12 cell edges, on polygon vertices and edges,
+  * inside holes, in the second part of a multipart region, outside every
+  * coarse cell, at the poles and the antimeridian, with null coordinates
+  * and with duplicated input rows. */
 class RegionsAtSpec extends SparkTestBase {
 
   private val schema = StructType(Seq(
@@ -96,7 +97,19 @@ class RegionsAtSpec extends SparkTestBase {
         r.getSeq[Long](4).toSeq)
     }.sortBy(_.toString)
 
-  /** Map-side rows == join-path rows; returns the map-side rows. */
+  /** `op` under Broadcast looks regions up map-side and returns the same
+    * schema and the same full rows as under Shuffle. */
+  private def assertSameOutput(op: SpatialJoin.Mode => DataFrame): Unit = {
+    val (mapSide, join) = (op(SpatialJoin.Broadcast), op(SpatialJoin.Shuffle))
+    assert(mapSide.queryExecution.optimizedPlan.toString.contains("regions_at"))
+    assert(mapSide.schema == join.schema, s"${mapSide.schema} vs ${join.schema}")
+    def sorted(df: DataFrame) = df.collect().toSeq.sortBy(_.toString)
+    val (got, want) = (sorted(mapSide), sorted(join))
+    assert(got == want, (got diff want).take(5) ++ Seq("vs") ++ (want diff got).take(5))
+  }
+
+  /** Map-side rows == join-path rows for `assignRegions`, `assign` and
+    * `assignOuter`; returns the map-side rows of `assignRegions`. */
   private def assertParity(cover: SpatialJoin.CoverSides): Seq[Out] = {
     val pts = points
     val mapSide = SpatialJoin.assignRegions(pts, "k", cover, SpatialJoin.Broadcast)
@@ -104,6 +117,8 @@ class RegionsAtSpec extends SparkTestBase {
     val got = rows(mapSide)
     val want = rows(SpatialJoin.assignRegions(pts, "k", cover, SpatialJoin.Shuffle))
     assert(got == want, (got diff want).take(5) ++ Seq("vs") ++ (want diff got).take(5))
+    assertSameOutput(SpatialJoin.assign(pts, "k", cover, _))
+    assertSameOutput(SpatialJoin.assignOuter(pts, "k", cover, _))
     got
   }
 
