@@ -100,7 +100,18 @@ object Pipeline {
     * partitioned write + lineage append. A killed run re-invoked with the
     * same runId recomputes ONLY the uncompleted cell prefixes. Returns the
     * number of input points actually processed this invocation. Regions
-    * come from SpatialJoin.assign, as in [[matches]]. */
+    * come from SpatialJoin.assign, as in [[matches]], deduplicated per
+    * (cell_prefix, url, region_id): the prefix is the unit a resume
+    * recomputes, so a url recurring in two prefixes keeps a row in each,
+    * on a fresh run and on a resumed one alike.
+    *
+    * The checkpointed points are hash-partitioned by prefix
+    * (Lineage.byPrefix). Under the map-side lookup that is the write's one
+    * exchange: the region lookup, the dedup and the partitioned write run
+    * on that partitioning, one task per partition. (A checkpoint forgets
+    * its partitioning under AQE, so the exchange sits after it.) A fresh
+    * run (no lineage directory yet) skips the prune and so reads no
+    * lineage. */
   def runResumable(spark: SparkSession, pages: DataFrame, outPath: String,
                    lineagePath: String, runId: String,
                    mode: SpatialJoin.Mode = SpatialJoin.Auto(),
@@ -109,16 +120,18 @@ object Pipeline {
     Metrics.withMetrics(spark, runId,
         s"$lineagePath-metrics/$runId-${System.nanoTime()}.json") {
       val pts = Lineage.withPrefix(geocode(pages))
-      val completed =
+      val todo =
         if (new java.io.File(lineagePath).exists())
-          Lineage.completedPrefixes(spark, lineagePath, runId)
-        else spark.emptyDataFrame.withColumn("cell_prefix", lit(0L)).limit(0)
-      val pruned = Lineage.pruneCompleted(pts, completed).localCheckpoint(true)
+          Lineage.pruneCompleted(pts,
+            Lineage.completedPrefixes(spark, lineagePath, runId))
+        else pts
+      val pruned = todo.localCheckpoint(true)
       val nProcessed = pruned.count()
       if (nProcessed > 0) {
         val matched = operators.SpatialJoin
-          .assign(pruned, "url",
-            cover.getOrElse(operators.SpatialJoin.coverDF(spark)), mode)
+          .assign(Lineage.byPrefix(pruned), "url",
+            cover.getOrElse(operators.SpatialJoin.coverDF(spark)), mode,
+            within = Seq("cell_prefix"))
         Lineage.writeWithLineage(matched, pruned.select("cell_prefix"),
           outPath, lineagePath, runId, hashCols = Seq("url", "region_id"))
       }

@@ -429,9 +429,15 @@ object SpatialJoin {
     * point explodes its `regions_at` set — the map-side lookup of
     * [[assignRegions]], no join. The shuffle modes keep the `ok` rows of
     * [[refinedCandidates]]; a region can match via several parts, hence
-    * the dedup. */
+    * the dedup.
+    *
+    * `within` scopes the key: output is one row per (`within` columns,
+    * key, region), for a key that is unique only inside each group (a url
+    * recurring at two coordinates in different groups keeps a row in
+    * each). Input already hash-partitioned on those columns dedups with
+    * no exchange. */
   def assign(points: DataFrame, keyCol: String, cover: CoverSides,
-             mode: Mode = Auto()): DataFrame = {
+             mode: Mode = Auto(), within: Seq[String] = Nil): DataFrame = {
     val matched = resolveMode(mode, cover) match {
       case Broadcast =>
         points.withColumn("region_id", explode(
@@ -441,7 +447,7 @@ object SpatialJoin {
           .where(col("ok"))
     }
     matched.select(col("region_id") +: points.columns.map(col): _*)
-      .dropDuplicates(keyCol, "region_id")
+      .dropDuplicates(within :+ keyCol :+ "region_id")
   }
 
   /** One row per distinct input point row with `regions: ARRAY<BIGINT>` —

@@ -35,17 +35,32 @@ object Lineage {
     df.withColumn("cell_prefix",
       GeoFunctions.cellEncode(col("lat"), col("lon"), lit(prefixRes)))
 
+  /** Hash-partition on `cell_prefix` into `defaultParallelism` (the count
+    * OsmPbf uses) partitions: each prefix lands in exactly one partition,
+    * and the explicit count keeps AQE from coalescing the exchange. A
+    * frame already partitioned this way keeps its plan (Spark drops the
+    * repartition as redundant), so partitioning the points once up front
+    * carries through to the write. */
+  def byPrefix(df: DataFrame): DataFrame =
+    df.repartition(df.sparkSession.sparkContext.defaultParallelism,
+      col("cell_prefix"))
+
   /** Write output partitioned by cell_prefix, then append per-prefix
     * lineage rows (count + order-independent xor checksum over the named
-    * key columns). `processedPrefixes` is the set of prefixes this run
-    * worked on — prefixes with ZERO output rows are still recorded
-    * complete (row_count 0), otherwise resume would re-process them
-    * forever. Lineage is appended strictly AFTER the data write action
-    * completes, so a killed run never records unfinished prefixes. */
+    * key columns). The rows are written [[byPrefix]]-partitioned: the
+    * write runs on every core and each prefix directory holds one data
+    * file (a hot prefix is one task's work); the lineage aggregate reuses
+    * that partitioning (no exchange). `processedPrefixes` is the set of
+    * prefixes this run worked on — prefixes with ZERO output rows are
+    * still recorded complete (row_count 0), otherwise resume would
+    * re-process them forever. Lineage is appended strictly AFTER the data
+    * write action completes, so a killed run never records unfinished
+    * prefixes. */
   def writeWithLineage(out: DataFrame, processedPrefixes: DataFrame,
                        outPath: String, lineagePath: String,
                        runId: String, hashCols: Seq[String]): DataFrame = {
-    val withP = if (out.columns.contains("cell_prefix")) out else withPrefix(out)
+    val withP = byPrefix(
+      if (out.columns.contains("cell_prefix")) out else withPrefix(out))
     // dynamic partition overwrite: a resumed run only rewrites the
     // partitions it recomputed; completed partitions are untouched
     withP.write.mode(SaveMode.Overwrite)

@@ -1,9 +1,11 @@
 package graft.plans
 
+import org.apache.spark.GraftBusBridge
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
 import org.apache.spark.sql.SparkSession
 
 import scala.collection.mutable.ArrayBuffer
+import scala.util.control.NonFatal
 
 /**
  * Per-stage row/byte metrics (SURVEY.md §4.4: "row-count metrics" for the
@@ -50,22 +52,26 @@ final class StageMetricsListener extends SparkListener {
 }
 
 object Metrics {
+  private lazy val log = org.slf4j.LoggerFactory.getLogger(getClass)
+
   /** Run `body` with a fresh stage listener attached; write the collected
-    * metrics JSON to `path` afterwards (best-effort — never fails a job). */
+    * metrics JSON to `path` afterwards. Before the snapshot the listener
+    * bus is drained, so every stage the body completed (the final lineage
+    * write included) is in the report. The report is best-effort: a
+    * failure to drain or write it is logged and never fails the job. */
   def withMetrics[T](spark: SparkSession, runId: String, path: String)(body: => T): T = {
     val listener = new StageMetricsListener
     spark.sparkContext.addSparkListener(listener)
     try body
     finally {
       try {
-        // listenerBus is private[spark]; a short sleep lets the async bus
-        // drain the final stage events before the snapshot
-        Thread.sleep(300)
+        GraftBusBridge.drain(spark.sparkContext)
         val p = java.nio.file.Paths.get(path)
         if (p.getParent != null) java.nio.file.Files.createDirectories(p.getParent)
         java.nio.file.Files.writeString(p, listener.toJson(runId))
-      } catch { case _: Exception => () }
-      spark.sparkContext.removeSparkListener(listener)
+      } catch {
+        case NonFatal(e) => log.warn(s"stage metrics report $path not written", e)
+      } finally spark.sparkContext.removeSparkListener(listener)
     }
   }
 }

@@ -25,7 +25,11 @@ class KnnSpec extends SparkTestBase {
           jobs.incrementAndGet()
       }
       spark.sparkContext.addSparkListener(l)
-      try { body; Thread.sleep(500); jobs.get() }
+      try {
+        body
+        org.apache.spark.GraftBusBridge.drain(spark.sparkContext)
+        jobs.get()
+      }
       finally spark.sparkContext.removeSparkListener(l)
     }
     val pt = Seq((1L, 0.0, 0.0)).toDF("k", "lat", "lon")
